@@ -9,8 +9,12 @@ Ship and run (north_star "ships as spark-submit --py-files modules"):
 
 On a real cluster, add --master/--deploy-mode to submit.sh's spark-submit
 line; the job itself is cluster-agnostic (no local paths, no driver-side
-collection of data rows). Re-running the same command after a kill resumes
-from the committed partitions (anti-join resume, operators/checkpoint.py).
+collection of data rows; the checkpoint table is read through Spark, so an
+hdfs:// or s3a:// --ckpt resumes too). Re-running the same command after a
+kill resumes from the committed partitions: one census query on the driver
+lists the part_ids still pending, waves with none pending launch no Spark
+job, and each pending wave reads only its own parts
+(operators/checkpoint.py).
 """
 
 from __future__ import annotations

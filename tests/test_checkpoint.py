@@ -13,6 +13,7 @@ from kiri_ocr_spark.fixtures import build_fixture
 from kiri_ocr_spark.operators.checkpoint import (
     CHECKPOINT_SCHEMA,
     committed_parts,
+    pending_parts,
     run_extraction,
     with_part_id,
 )
@@ -24,6 +25,49 @@ N_PARTS = 8
 def fixture_tables(spark, sf_tiny):
     docs, media = build_fixture(spark, sf_tiny)
     return docs.cache(), media.cache()
+
+
+def _listing(*dirs):
+    """(path, size, mtime) of every file under ``dirs``."""
+    return sorted(
+        (p, os.path.getsize(p), os.path.getmtime(p))
+        for d in dirs
+        for p in glob.glob(os.path.join(d, "**"), recursive=True)
+        if os.path.isfile(p)
+    )
+
+
+def _jobs_in_group(spark, group, action):
+    """Run ``action`` under job group ``group``; returns its result and the
+    number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store is fed by the listener bus: drain it before counting
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _kill_parts(spark, out_dir, ckpt_dir, dead):
+    """Simulate a crash that lost the output partitions AND checkpoint rows
+    of the part_ids in ``dead``."""
+    for pid in dead:
+        for path in glob.glob(os.path.join(out_dir, f"part_id={pid}")):
+            shutil.rmtree(path)
+    surviving = (
+        spark.read.parquet(ckpt_dir)
+        .filter(~F.col("part_id").isin(list(dead)))
+        .toPandas()
+    )
+    for f in glob.glob(os.path.join(ckpt_dir, "*.parquet")):
+        os.remove(f)
+    spark.createDataFrame(surviving, CHECKPOINT_SCHEMA).write.mode(
+        "overwrite"
+    ).parquet(ckpt_dir)
 
 
 def _read_sorted(spark, out_dir):
@@ -60,19 +104,7 @@ def test_kill_and_resume_recomputes_only_missing(spark, fixture_tables, tmp_path
     # partitions AND checkpoint rows for half the part_ids
     run_extraction(spark, docs, media, out_b, ckpt_b, "r2", n_parts=N_PARTS)
     dead = set(range(N_PARTS // 2))
-    for pid in dead:
-        for path in glob.glob(os.path.join(out_b, f"part_id={pid}")):
-            shutil.rmtree(path)
-    surviving = (
-        spark.read.parquet(ckpt_b)
-        .filter(~F.col("part_id").isin(list(dead)))
-        .toPandas()
-    )
-    for f in glob.glob(os.path.join(ckpt_b, "*.parquet")):
-        os.remove(f)
-    spark.createDataFrame(surviving, CHECKPOINT_SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(ckpt_b)
+    _kill_parts(spark, out_b, ckpt_b, dead)
 
     # resume: must process exactly the dead partitions
     n = run_extraction(spark, docs, media, out_b, ckpt_b, "r2", n_parts=N_PARTS)
@@ -158,3 +190,91 @@ def test_part_id_stability(spark, fixture_tables):
     b = with_part_id(docs, N_PARTS).select("doc_id", "part_id").toPandas()
     assert a.sort_values("doc_id").equals(b.sort_values("doc_id"))
     assert a["part_id"].between(0, N_PARTS - 1).all()
+
+
+def test_waves_kill_and_resume(spark, fixture_tables, tmp_path):
+    """waves=4 (the production default): a run killed after committing all
+    but one wave resumes exactly that wave's parts, with the same output as
+    a single-shot run."""
+    docs, media = fixture_tables
+    out_a, ckpt_a = str(tmp_path / "out_a"), str(tmp_path / "ckpt_a")
+    out_b, ckpt_b = str(tmp_path / "out_b"), str(tmp_path / "ckpt_b")
+    run_extraction(spark, docs, media, out_a, ckpt_a, "ref", n_parts=N_PARTS)
+    ref = _read_sorted(spark, out_a)
+
+    n_all = run_extraction(
+        spark, docs, media, out_b, ckpt_b, "w4", n_parts=N_PARTS, waves=4
+    )
+    assert n_all == N_PARTS
+    dead = {p for p in range(N_PARTS) if p % 4 == 1}
+    _kill_parts(spark, out_b, ckpt_b, dead)
+
+    n = run_extraction(
+        spark, docs, media, out_b, ckpt_b, "w4", n_parts=N_PARTS, waves=4
+    )
+    assert n == len(dead)
+    assert _read_sorted(spark, out_b).equals(ref)
+    ckpt_rows = spark.read.parquet(ckpt_b).toPandas()
+    assert sorted(ckpt_rows["part_id"].tolist()) == list(range(N_PARTS))
+    assert ckpt_rows["docs_done"].sum() == docs.count()
+
+
+def test_noop_resume_runs_only_the_census(spark, fixture_tables, tmp_path):
+    """Resuming a fully committed checkpoint whose n_parts exceeds the doc
+    count (so some parts are empty and never get a lineage row) launches
+    no job beyond the census query and touches no file."""
+    docs, media = fixture_tables
+    ids = [r.doc_id for r in docs.select("doc_id").orderBy("doc_id").limit(5).collect()]
+    few = docs.filter(F.col("doc_id").isin(ids))
+    n_parts = 16
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    n = run_extraction(spark, few, media, out, ckpt, "noop", n_parts=n_parts, waves=4)
+    assert 0 < n <= len(ids) < n_parts
+    before = _listing(out, ckpt)
+
+    pending, census_jobs = _jobs_in_group(
+        spark, "ckpt-census", lambda: pending_parts(spark, few, ckpt, "noop", n_parts)
+    )
+    assert pending == []
+    n2, resume_jobs = _jobs_in_group(
+        spark,
+        "ckpt-noop-resume",
+        lambda: run_extraction(
+            spark, few, media, out, ckpt, "noop", n_parts=n_parts, waves=4
+        ),
+    )
+    assert n2 == 0
+    assert resume_jobs <= census_jobs
+    assert _listing(out, ckpt) == before
+
+
+def test_run_extraction_keeps_caller_session_state(spark, fixture_tables, tmp_path):
+    """The output's dynamic overwrite is a write option, not a session
+    setting, and the per-wave job descriptions are restored afterwards."""
+    docs, media = fixture_tables
+    few = docs.orderBy("doc_id").limit(3)
+    sc = spark.sparkContext
+    key = "spark.sql.sources.partitionOverwriteMode"
+    session_mode = spark.conf.get(key)
+    # pin the default so a leak from any earlier caller cannot mask one here
+    spark.conf.set(key, "STATIC")
+    sc.setJobDescription("caller")
+    try:
+        run_extraction(
+            spark, few, media, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+            "state", n_parts=4, waves=2,
+        )
+        assert spark.conf.get(key) == "STATIC"
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set(key, session_mode)
+
+
+@pytest.mark.parametrize("make_dir", [False, True], ids=["missing", "empty"])
+def test_committed_parts_without_checkpoint(spark, tmp_path, make_dir):
+    """A missing or empty checkpoint dir means nothing is committed."""
+    ckpt = tmp_path / "ckpt"
+    if make_dir:
+        ckpt.mkdir()
+    assert committed_parts(spark, str(ckpt), "r1").count() == 0

@@ -8,9 +8,10 @@ cited in OPTIMIZATION_r07.md on demand:
 
 Prints one JSON line with:
 - encode_ctc_ms_per_line  : stacked fp32 encode + CTC greedy, cold memo
-- beam_lockstep_ms_per_line / beam_per_line_ms_per_line : the lockstep
-  wave decoder vs per-line beam_decode on the same memories (texts are
-  asserted identical — the lockstep equality contract)
+- beam_lockstep_ms_per_line / beam_per_line_ms_per_line : one lockstep
+  wave over all lines vs per-line beam_decode (a wave of one line each)
+  on the same memories (texts are asserted identical — the lockstep
+  equality contract)
 - min_area_rect_ms        : rotating-calipers geometry on dense sets
 - db_detect_ms_per_page / craft_detect_ms_per_page : full detector
   forward + postprocess per fixture page
@@ -101,7 +102,8 @@ def main() -> None:
         (time.perf_counter() - t0) / n * 1e3, 2
     )
 
-    # beam: lockstep vs per-line on identical memories
+    # beam: one wave over all lines vs one wave per line (beam_decode),
+    # on identical memories
     nb = min(len(crops), 96)
     mems = np.concatenate(
         [

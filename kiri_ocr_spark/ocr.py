@@ -185,19 +185,43 @@ class OCR:
         DBNet/CRAFT emits line-grade regions and both steps
         reduce to no-ops. Text-match verified per line against
         the construction oracle (media_text_db/_craft queries)."""
-        boxes = self.detector.detect_boxes(gray)
-        if self.detector.method in ("db", "craft"):
-            from .operators.detect import (
-                merge_boxes_into_rows,
-                split_box_at_blank_rows,
-            )
+        return self._normalize_boxes(ink, self.detector.detect_boxes(gray))
 
-            boxes = [
-                (int(b[0]), int(b[1]), int(b[2]), int(b[3]), float(row[4]))
-                for row in merge_boxes_into_rows(boxes)
-                for b in split_box_at_blank_rows(ink, row)
-            ]
-        return boxes
+    def _normalize_boxes(self, ink: np.ndarray, boxes: list) -> list:
+        """db/craft row normalization of one page's raw detector boxes
+        (the tail of _detect_line_boxes, shared with process_documents);
+        other methods' boxes pass through unchanged."""
+        if self.detector.method not in ("db", "craft"):
+            return boxes
+        from .operators.detect import (
+            merge_boxes_into_rows,
+            split_box_at_blank_rows,
+        )
+
+        return [
+            (int(b[0]), int(b[1]), int(b[2]), int(b[3]), float(row[4]))
+            for row in merge_boxes_into_rows(boxes)
+            for b in split_box_at_blank_rows(ink, row)
+        ]
+
+    def _recognize_boxes(
+        self, gray: np.ndarray, ink: np.ndarray, boxes: list
+    ) -> list[dict]:
+        """Recognize each box of one page into process_document's
+        result dicts."""
+        results = []
+        for i, box in enumerate(boxes, start=1):
+            text, conf = self._recognize_region(gray, ink, box)
+            results.append(
+                {
+                    "box": [int(v) for v in box[:4]],
+                    "text": text,
+                    "confidence": float(conf),
+                    "det_confidence": float(box[4]) if len(box) > 4 else 1.0,
+                    "line_number": i,
+                }
+            )
+        return results
 
     # -- reference public surface ------------------------------------------
 
@@ -214,19 +238,7 @@ class OCR:
                      self.detector.detect_words(gray)]
         else:
             raise ValueError(f"unknown mode {mode!r}")
-        results = []
-        for i, box in enumerate(boxes, start=1):
-            text, conf = self._recognize_region(gray, ink, box)
-            results.append(
-                {
-                    "box": [int(v) for v in box[:4]],
-                    "text": text,
-                    "confidence": float(conf),
-                    "det_confidence": float(box[4]) if len(box) > 4 else 1.0,
-                    "line_number": i,
-                }
-            )
-        return results
+        return self._recognize_boxes(gray, ink, boxes)
 
     def process_documents(
         self, images: list, mode: str = "lines"
@@ -241,37 +253,10 @@ class OCR:
         grays = [self._load_gray(im) for im in images]
         inks = [binarize(g) for g in grays]
         raw_list = self.detector.detect_boxes_batch(grays)
-        out: list[list[dict]] = []
-        for gray, ink, raw in zip(grays, inks, raw_list):
-            if self.detector.method in ("db", "craft"):
-                from .operators.detect import (
-                    merge_boxes_into_rows,
-                    split_box_at_blank_rows,
-                )
-
-                boxes = [
-                    (int(b[0]), int(b[1]), int(b[2]), int(b[3]), float(row[4]))
-                    for row in merge_boxes_into_rows(raw)
-                    for b in split_box_at_blank_rows(ink, row)
-                ]
-            else:
-                boxes = raw
-            results = []
-            for i, box in enumerate(boxes, start=1):
-                text, conf = self._recognize_region(gray, ink, box)
-                results.append(
-                    {
-                        "box": [int(v) for v in box[:4]],
-                        "text": text,
-                        "confidence": float(conf),
-                        "det_confidence": (
-                            float(box[4]) if len(box) > 4 else 1.0
-                        ),
-                        "line_number": i,
-                    }
-                )
-            out.append(results)
-        return out
+        return [
+            self._recognize_boxes(gray, ink, self._normalize_boxes(ink, raw))
+            for gray, ink, raw in zip(grays, inks, raw_list)
+        ]
 
     def extract_text(self, image, mode: str = "lines") -> tuple[str, list[dict]]:
         """core.py:1104-1160: recognize then group results into text lines

@@ -485,6 +485,30 @@ def test_process_document_neural_methods_read_exact_lines():
             assert got == lines, (method, lines, got)
 
 
+def test_process_documents_equals_per_page_process_document():
+    """The batched process_documents (same-shape neural detection
+    batched, one shared row-normalization tail) returns exactly the
+    per-page process_document results for db and craft, over pages of
+    mixed and repeated shapes."""
+    from kiri_ocr_spark.imaging.glyphs import SCALE, render_page
+    from kiri_ocr_spark.ocr import OCR
+
+    pages = [
+        render_page(lines, scale=SCALE)
+        for lines in (
+            ["order sort", "table"],
+            ["the fast key"],
+            ["column row", "a"],
+            ["order sort", "table"],  # same shape as the first page
+        )
+    ]
+    for method in ("db", "craft"):
+        ocr = OCR(det_method=method)
+        batched = ocr.process_documents(pages)
+        assert batched == [ocr.process_document(p) for p in pages]
+        assert all(batched)
+
+
 def test_calibrated_weight_load_warns_and_falls_back_on_corrupt_npz(tmp_path, monkeypatch):
     """Advisor r5: a corrupt/missing calibrated npz must warn and fall
     back to the hand construction, never break the import path."""

@@ -421,7 +421,7 @@ def test_beam_kv_cache_matches_full_forward():
         for _ in range(max_len):
             if all(done for *_, done in beams):
                 break
-            beams = model._beam_advance(beams, mem, scorer, beam, kv=None)
+            beams = model._beam_advance(beams, mem, scorer, beam)
         best = model._final_best(beams, mem, scorer, ctc_text)
         seq = np.array(best[0][1:], dtype=np.int64)
         conf = float(np.clip(np.exp(best[2] / max(len(seq), 1)), 0.0, 1.0))
@@ -478,11 +478,12 @@ def test_decode_crops_memo_equals_plain_chunked_decode():
 def test_beam_decode_batch_matches_per_line():
     """Law (round 7): the lockstep multi-line beam (beam_decode_batch —
     batched per-step decoder GEMMs + one merged CTC-fusion sweep across
-    lines) produces the SAME texts as per-line beam_decode, with
-    confidences agreeing to ~1e-9 — the same contract tier as the KV
-    cache vs the full forward. Exercises mixed-length lines (lines leave
-    the lockstep wave at different steps), the >LOCKSTEP_LINES chunking
-    path, and the fusion-off (scorer=None) seed-model path."""
+    lines) produces the SAME texts as per-line beam_decode (a wave of
+    one line), with confidences agreeing to ~1e-9 — the same contract
+    tier as the KV cache vs the full forward. Exercises mixed-length
+    lines (lines leave the lockstep wave at different steps), the
+    >LOCKSTEP_LINES chunking path, and the fusion-off (scorer=None)
+    seed-model path."""
     import os
 
     import numpy as np
@@ -546,3 +547,103 @@ def test_beam_decode_batch_matches_per_line():
     for (ta, ca), (tb, cb) in zip(pl, bt):
         assert ta == tb
         assert abs(ca - cb) < 1e-9
+
+
+def test_beam_steps_final_equals_multi_line_wave():
+    """Stream/batch parity against a real multi-line wave: on the
+    trained artifact (fusion + CTC rescoring on), every line's final
+    beam_decode_steps event equals its entry of one beam_decode_batch
+    over a mixed-length deck — lines leave that wave at different
+    steps, while the stream decodes each line as a wave of one. Text
+    equal, confidence within the lockstep contract's 1e-9."""
+    import os
+
+    from kiri_ocr_spark.operators.model import ENCODE_CHUNK, load_model
+    from kiri_ocr_spark.operators.train import charset_coverage_lines, render_crop
+
+    path = os.path.join(os.path.dirname(__file__), "..", "models", "trained_full.npz")
+    if not os.path.exists(path):
+        pytest.skip("trained artifact not built")
+    model = load_model(path)
+    lines = charset_coverage_lines(6, seed=20260822) + [
+        "x", "hello world", "a much longer line of text for the cap",
+    ]
+    crops = np.stack([render_crop(ln, model.tok)[1] for ln in lines])
+    mems = np.concatenate(
+        [
+            model.encode(crops[j : j + ENCODE_CHUNK].astype(np.float32), fp32=True)
+            for j in range(0, len(crops), ENCODE_CHUNK)
+        ],
+        axis=0,
+    )
+    batch = model.beam_decode_batch(mems)
+    steps_taken = set()
+    for i in range(len(mems)):
+        events = list(model.beam_decode_steps(mems[i]))
+        assert [ev["finished"] for ev in events] == [False] * (len(events) - 1) + [True]
+        steps_taken.add(events[-1]["step"])
+        text, conf = batch[i]
+        assert events[-1]["text"] == text
+        assert abs(events[-1]["confidence"] - conf) < 1e-9
+    assert len(steps_taken) > 1  # the wave really was ragged
+
+
+def test_pad_splice_stem_equals_full_stem(monkeypatch):
+    """Law (ADVICE r7): the conv stem's pad-splice fast path
+    (_stem_forward computes only the content slice and splices cached
+    all-pad columns) is np.array_equal to the plain full-stem loop on
+    realistic right-padded crops — rendered lines of mixed widths
+    through resize_keep_ratio_pad, the widest near the splice's reach —
+    in fp32 and fp64 on the trained artifact. Pins that a BLAS,
+    threading or environment change cannot break bit-exactness
+    silently. The model comes from get_model, the deployment entry
+    point, which pins OpenBLAS to one thread: the row-stability the
+    splice relies on is a single-thread property (with the vendored
+    OpenBLAS's default threading, columns at thread-split boundaries
+    differ in the last bits)."""
+    import os
+
+    from kiri_ocr_spark.imaging.glyphs import SCALE, render_page
+    from kiri_ocr_spark.operators.model import get_model
+
+    path = os.path.join(os.path.dirname(__file__), "..", "models", "trained_full.npz")
+    if not os.path.exists(path):
+        pytest.skip("trained artifact not built")
+    model = get_model(path=path)
+    lines = [
+        "x",
+        "hello world",
+        "the quick brown fox jumps",
+        "the quick brown fox jumps over the laz",  # 617 of 640 columns
+    ]
+    crops = np.stack(
+        [resize_keep_ratio_pad(render_page([ln], scale=SCALE)) for ln in lines]
+    ).astype(np.float32)
+    widths = [int(np.flatnonzero((c != 128).any(axis=0))[-1]) + 1 for c in crops]
+    assert widths == sorted(widths) and 600 <= widths[-1] < 640
+    batches = [crops, crops[:2], crops[3:], crops[:1]]
+
+    spliced_calls = []
+    pad_stem = NumpyKiriModel._pad_stem
+
+    def spy(self, *args):
+        spliced_calls.append(args)
+        return pad_stem(self, *args)
+
+    monkeypatch.setattr(NumpyKiriModel, "_pad_stem", spy)
+    spliced = {
+        fp32: [model.encode(b, fp32=fp32) for b in batches] for fp32 in (True, False)
+    }
+    assert len(spliced_calls) == 2 * len(batches)  # every encode spliced
+
+    def full_stem(self, x, images):
+        for layer in self.convs:
+            x = self._conv(x, layer)
+        return x
+
+    monkeypatch.setattr(NumpyKiriModel, "_stem_forward", full_stem)
+    for fp32, outs in spliced.items():
+        for b, got in zip(batches, outs):
+            want = model.encode(b, fp32=fp32)
+            assert got.dtype == want.dtype
+            assert np.array_equal(got, want)
